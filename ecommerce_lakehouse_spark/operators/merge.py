@@ -19,12 +19,31 @@ Execution plan (all Spark DataFrame ops, one snapshot commit):
    broadcast-vs-shuffle strategy, the north_rule's skew-aware join: AQE
    skew-join splitting handles hot url prefixes on the shuffle path, and an
    optional explicit salt spreads a pathological hot key deterministically).
-3. **Hybrid merge join** of affected-file rows with the source on the key
-   (matched → source values minus preserved columns, target-only →
-   passthrough, source-only → insert): small sources take the broadcast
-   plan (target LEFT JOIN broadcast(source) + anti-join inserts — the
-   target side is never shuffled); large sources take full-outer
-   sort-merge with AQE skew splitting.
+3. **Rewrite join** of affected-file rows with the source on the key
+   (matched → source values, except the *carried* columns — neither keys
+   nor updated: ``preserve_cols``, the non-updated columns of a partial
+   update, ``_row_id`` under lineage — which keep the target's; target-only
+   → passthrough; source-only → insert). One of three plans
+   (:func:`_merge_plan`, recorded as ``merge_plan`` in the snapshot
+   summary):
+
+   - ``key_broadcast`` — the key set fits (``n_src_keys <=
+     BROADCAST_KEY_LIMIT``) and every carried column is fixed-width,
+     whatever the payload size: SCD1, fact, preserve-column and
+     delete merges. Only keys meet: passthrough = target LEFT JOIN
+     broadcast(source keys), keeping the unmatched rows; upserts = every
+     source row, taking its carried columns from broadcast(matched target
+     rows projected to keys + carried columns, ≤ n_src_keys rows). No
+     payload column goes through an exchange.
+   - ``source_broadcast`` — the key set fits, a carried column is
+     variable-width (SCD2 close step, sessionize) and the whole source
+     fits ``BROADCAST_BYTES_LIMIT``: target LEFT JOIN broadcast(source)
+     + anti-join inserts.
+   - ``sort_merge`` — everything else: full outer sort-merge join with
+     AQE skew splitting.
+
+   Output files are capped at ``target_file_rows`` rows by the writer
+   itself (``maxRecordsPerFile``), so no plan adds a sizing exchange.
 4. **Atomic commit**: replace(affected files → rewritten files + inserts).
 
 Idempotency: merging the same source twice yields identical table state
@@ -45,12 +64,22 @@ from pyspark.sql.window import Window
 from ..table.format import ROW_ID, IcehouseTable, Snapshot
 from ..table.stats import _norm
 
-# Hybrid join strategy thresholds (north_rule: broadcast-vs-sort-merge
-# keyed on url): broadcast the source when BOTH hold — key count small AND
-# Catalyst's size estimate under the byte cap (html-heavy sources get wide;
+# Rewrite-plan thresholds (north_rule: broadcast-vs-sort-merge keyed on
+# url). Key sets up to BROADCAST_KEY_LIMIT are broadcast (discovery probe,
+# key_broadcast plan); the whole source is broadcast only when its size
+# estimate is also under the byte cap (html-heavy sources get wide;
 # broadcasting multi-GB build sides OOMs executors at cluster scale).
 BROADCAST_KEY_LIMIT = 1_000_000
 BROADCAST_BYTES_LIMIT = 256 * 1024 * 1024
+
+# Carried columns of these types have a bounded width, so the key_broadcast
+# build side (matched target rows projected to keys + carried columns) is
+# bounded by the key set; a variable-width carried column could make it as
+# wide as the target's payload.
+FIXED_WIDTH_TYPES = frozenset({
+    "boolean", "byte", "short", "integer", "long", "float", "double",
+    "decimal", "date", "timestamp", "timestamp_ntz",
+})
 
 
 @contextmanager
@@ -117,15 +146,6 @@ def _auto_salt(candidates, key: str) -> int | None:
     if dup < AUTO_SALT_MIN_DUP:
         return None
     return int(min(AUTO_SALT_MAX, 2 ** math.ceil(math.log2(dup))))
-
-
-def _candidate_files(table: IcehouseTable, source: DataFrame, key_cols: list[str]):
-    """Prune target files whose key-range stats cannot overlap the source."""
-    bounds = source.agg(
-        *[F.min(k).alias(f"lo_{k}") for k in key_cols],
-        *[F.max(k).alias(f"hi_{k}") for k in key_cols],
-    ).first()
-    return _prune_candidates(table.live_files(), bounds, key_cols)
 
 
 INTERVAL_ROUTE_MIN_FILES = 8
@@ -333,9 +353,10 @@ def _footer_prep_stats(source: DataFrame, keys: list[str], schema) -> dict | Non
     deliberate conservatisms: ``__nkeys`` is the row count (an upper bound
     on distinct keys — the merge contract requires a key-unique source, and
     every consumer of the number is monotone-safe: broadcast refusal,
-    output-file sizing, the no-op check), and ``__null_keys`` sums per-key
-    null counts (for composite keys an upper bound on null-key rows; it
-    only gates the error message). String bounds come from
+    the no-op check), and ``__null_keys`` is a LOWER bound on null-key
+    rows (per file, the largest per-key null count — exact for a single
+    key; it is zero exactly when no key is null, which is all the null
+    guard needs). String bounds come from
     :func:`..table.stats.file_stats`, whose upper bounds are round-up
     truncated, so pruning stays superset-safe. Returns None whenever any
     footer lacks the needed stats — callers fall back to the agg job.
@@ -372,17 +393,19 @@ def _footer_prep_stats(source: DataFrame, keys: list[str], schema) -> dict | Non
         except Exception:
             return None
         tot_rows += rows
+        file_nulls = 0
         for k in keys:
             e = st.get(k)
             if e is None or e["null_count"] is None:
                 return None  # footer can't answer the null guard
-            null_keys += e["null_count"]
+            file_nulls = max(file_nulls, e["null_count"])
             if e["min"] is not None and (lo[k] is None or e["min"] < lo[k]):
                 lo[k] = e["min"]
             if e["max"] is not None and (hi[k] is None or e["max"] > hi[k]):
                 hi[k] = e["max"]
             if e["min"] is None and rows > e["null_count"]:
                 return None  # non-null values but no bounds: stats disabled
+        null_keys += file_nulls
     out = {"__nrows": tot_rows, "__nkeys": tot_rows, "__null_keys": null_keys}
     for k in keys:
         out[f"lo_{k}"] = lo[k]
@@ -577,19 +600,12 @@ def merge_into(
         with _job_phase(spark, "merge: key-stats prep"):
             prep = _prep_key_stats(source, keys).first()
     n_src_keys = prep["__nkeys"]
-    # Byte-size estimate for the broadcast decision — a SECOND, conditional
-    # action: when the key count alone disqualifies the broadcast the
-    # estimate is irrelevant and no payload byte is ever read; otherwise a
-    # limit()-bounded sample (≤ WIDTH_SAMPLE_ROWS rows, short-circuits the
-    # scan) measures avg variable-column widths. Replaces both the former
-    # private _jdf…stats() call and round 2's full-source width scan.
-    if n_src_keys <= BROADCAST_KEY_LIMIT:
-        src_bytes_est = _estimate_src_bytes(source, prep["__nrows"])
-    else:
-        src_bytes_est = None  # unused: broadcast already ruled out
     if prep["__null_keys"]:
+        # footer counts are a lower bound (see _footer_prep_stats)
+        n_null = prep["__null_keys"]
+        count = f"at least {n_null}" if footer_prep is not None else f"{n_null}"
         raise ValueError(
-            f"merge_into: {prep['__null_keys']} source row(s) have NULL in "
+            f"merge_into: {count} source row(s) have NULL in "
             f"merge key(s) {keys}; null keys are unsupported — filter or "
             f"coalesce them before merging"
         )
@@ -660,6 +676,10 @@ def merge_into(
         and n_src_keys >= skip_ratio * cand_rows
     )
     affected_paths: list[str] = []
+    # whether the matched target rows hold each key at most once — lets the
+    # key_broadcast plan write source rows without looking their match up
+    # (None: unknown, discovery skipped)
+    tgt_keys_unique: bool | None = True
     if candidates and not discovery_skipped:
         cand_full = [f"{table.path}/{f.path}" for f in candidates]
         # name-mapped read: files written before a rename_column carry the
@@ -682,9 +702,15 @@ def merge_into(
         else:
             hit = tgt_cand.join(probe, keys, "left_semi")
         with _job_phase(spark, "merge: affected-file discovery"):
-            affected_paths = [
-                r["__file"] for r in hit.select("__file").distinct().collect()
-            ]
+            # hit rows are pre-DV, so "unique" here is conservative: DVs
+            # only remove rows
+            got = hit.agg(
+                F.collect_set("__file").alias("files"),
+                F.count(F.lit(1)).alias("rows"),
+                F.count_distinct(*keys).alias("keys"),
+            ).first()
+        affected_paths = list(got["files"])
+        tgt_keys_unique = got["rows"] == got["keys"]
 
     def _to_rel(p: str) -> str:
         if p.startswith("file:"):
@@ -695,13 +721,15 @@ def merge_into(
 
     if discovery_skipped:
         affected_files = list(candidates)
+        tgt_keys_unique = None
     else:
-        rel_affected = [_to_rel(p) for p in affected_paths]
-        by_rel = {f.path: f for f in candidates}
-        affected_files = [by_rel[r] for r in rel_affected if r in by_rel]
+        rel_affected = {_to_rel(p) for p in affected_paths}
+        affected_files = [f for f in candidates if f.path in rel_affected]
 
     # --- pre-write no-op detection (P7 empty short-circuit) ------------------
-    # discovery is exact: matches exist ⟺ affected_files non-empty
+    # exact discovery: matches exist ⟺ affected_files non-empty. A skipped
+    # discovery keeps every routed candidate, so a delta that matches
+    # nothing still rewrites them (value-identical) — it never lands here.
     if not affected_files:
         if delete_matched or not insert_new or n_src_keys == 0:
             return MergeResult(None, 0, 0, 0, 0)
@@ -710,130 +738,39 @@ def merge_into(
     # read through the DV-applied primitive: rows deleted by deletion
     # vectors must not be resurrected by the rewrite (their registry entries
     # drop in the same commit that replaces the files)
-    if affected_files:
-        tgt = table.read_files(
-            affected_files, snapshot=base_snap, schema=schema,
-            with_row_id=lineage,
-        )
-    else:
-        tgt = spark.createDataFrame([], schema)
-        if lineage:
-            tgt = tgt.withColumn(ROW_ID, F.lit(None).cast("long"))
+    tgt = table.read_files(
+        affected_files, snapshot=base_snap, schema=schema, with_row_id=lineage,
+    )
 
     upd_set = set(update_cols) if update_cols is not None else (
         set(tcols) - set(keys) - set(preserve_cols)
     )
-    broadcast_path = (
-        n_src_keys <= BROADCAST_KEY_LIMIT
-        and src_bytes_est <= BROADCAST_BYTES_LIMIT
+    carried = [] if delete_matched else [
+        c for c in tcols if c not in keys and c not in upd_set
+    ]
+    plan = _merge_plan(
+        source, prep["__nrows"], n_src_keys,
+        [schema[c].dataType for c in carried],
     )
-
-    if broadcast_path:
-        # SMALL-SOURCE PLAN (the 10^12-doc hot path): the target side is
-        # NEVER shuffled. Updates/passthrough = target LEFT JOIN
-        # broadcast(source); inserts = source LEFT-ANTI broadcast(matched
-        # keys) — matched keys ⊆ source keys, so both broadcasts are small.
-        t = tgt.alias("t").withColumn("__t", F.lit(True))
-        s = source.alias("s").withColumn("__s", F.lit(True))
-        cond = [t[k].eqNullSafe(s[k]) for k in keys]
-        joined = t.join(F.broadcast(s), cond, "left")
-    else:
-        # LARGE-SOURCE PLAN: sort-merge full outer; AQE splits skewed keys,
-        # and the caller can layer deterministic salting on discovery.
-        t = tgt.alias("t").withColumn("__t", F.lit(True))
-        s = source.alias("s").withColumn("__s", F.lit(True))
-        cond = [t[k].eqNullSafe(s[k]) for k in keys]
-        joined = t.join(s, cond, "full_outer")
-
-    matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
-    out_cols = []
-    for c in tcols:
-        tc, sc = t[c], (s[c] if c in source.columns else F.lit(None))
-        if c in keys:
-            expr = F.coalesce(tc, sc)
-        elif c in upd_set:
-            expr = F.when(matched, sc).when(F.col("__t").isNotNull(), tc).otherwise(sc)
-        else:
-            expr = F.when(F.col("__t").isNotNull(), tc).otherwise(sc)
-        out_cols.append(expr.alias(c))
-    if lineage:
-        # carried/updated rows keep the target's id; full-outer insert rows
-        # (__t null) get NULL and fall back to the commit-assigned virtual id
-        out_cols.append(
-            F.when(F.col("__t").isNotNull(), t[ROW_ID])
-            .otherwise(F.lit(None).cast("long"))
-            .alias(ROW_ID)
-        )
-
-    # Merge metrics ride along the single write action via Observation —
-    # no persist of the wide join and no second pass over it.
-    from pyspark.sql import Observation
-
-    obs = None
-    if collect_metrics:
-        obs = Observation("merge_metrics")
-        joined = joined.observe(
-            obs,
-            F.sum(F.when(matched, 1).otherwise(0)).alias("n_upd"),
-            F.sum(
-                F.when(F.col("__s").isNotNull() & F.col("__t").isNull(), 1).otherwise(0)
-            ).alias("n_ins"),
-            F.sum(
-                F.when(F.col("__t").isNotNull() & F.col("__s").isNull(), 1).otherwise(0)
-            ).alias("n_pass"),
-        )
-
-    obs_ins = None
-    if delete_matched:
-        result = joined.filter(F.col("__t").isNotNull() & F.col("__s").isNull()).select(
-            *[t[c].alias(c) for c in tcols],
-            *([t[ROW_ID].alias(ROW_ID)] if lineage else []),
-        )
-    elif not insert_new:
-        result = joined.filter(F.col("__t").isNotNull()).select(*out_cols)
-    elif broadcast_path:
-        # inserts don't appear in a LEFT join: union source rows whose key
-        # matched nothing (anti-join against the broadcast matched-key set)
-        matched_keys = tgt.select(*keys).join(
-            F.broadcast(src_keys), keys, "left_semi"
-        ).distinct()
-        inserts = source.join(F.broadcast(matched_keys), keys, "left_anti").select(*tcols)
-        if lineage:
-            inserts = inserts.withColumn(ROW_ID, F.lit(None).cast("long"))
-        if collect_metrics:
-            obs_ins = Observation("merge_inserts")
-            inserts = inserts.observe(obs_ins, F.count(F.lit(1)).alias("n_ins"))
-        result = joined.select(*out_cols).unionByName(inserts)
-    else:
-        result = joined.select(*out_cols)
-
-    # Output file sizing from metadata only (no pre-count): affected rows from
-    # manifests + distinct source keys as the insert upper bound.
-    parts = None
-    if target_file_rows:
-        est = sum(f.row_count for f in affected_files) + n_src_keys
-        parts = max(1, (est + target_file_rows - 1) // target_file_rows)
+    result, counts = _rewrite_frame(
+        plan, tgt, source, keys, tcols, upd_set,
+        lineage=lineage, insert_new=insert_new, delete_matched=delete_matched,
+        collect_metrics=collect_metrics, n_src_rows=prep["__nrows"],
+        tgt_keys_unique=bool(tgt_keys_unique),
+    )
 
     # stage first (triggers the one write action → metrics become available),
     # then commit atomically with the metrics in the snapshot summary
     with _job_phase(spark, "merge: rewrite+write"):
         added = table._stage_dataframe(
             result, None, snapshot_id=table.current_version() + 1,
-            target_partitions=parts,
+            max_records_per_file=target_file_rows,
             # range sampling would execute `result` twice and double the
             # Observation counters riding it — sort.order degrades to a
             # within-partition sort here (row-group stats still tighten)
             range_sort_ok=False,
         )
-    if obs is not None:
-        got = obs.get
-        n_upd, n_ins, n_pass = got["n_upd"] or 0, got["n_ins"] or 0, got["n_pass"] or 0
-        if obs_ins is not None:
-            n_ins = obs_ins.get["n_ins"] or 0
-        if not insert_new or delete_matched:
-            n_ins = 0
-    else:
-        n_upd = n_ins = n_pass = -1  # metrics skipped (foreachBatch-safe)
+    n_upd, n_ins, n_pass = counts()
 
     snap = table.replace_files(
         [f.path for f in affected_files],
@@ -850,6 +787,190 @@ def merge_into(
             "merge_candidates_global": n_global_candidates,
             "merge_candidates_scanned": len(candidates),
             "merge_discovery": "skipped" if discovery_skipped else "exact",
+            "merge_plan": plan,
         },
     )
     return MergeResult(snap, n_upd, n_ins, n_upd + n_ins + n_pass, len(affected_files))
+
+
+def _merge_plan(source: DataFrame, n_rows: int, n_src_keys: int,
+                carried_types: list) -> str:
+    """Choose the rewrite plan (module docstring, step 3). The source-size
+    estimate — the only step that may read payload bytes — runs only when
+    key_broadcast is ruled out by a variable-width carried column and the
+    key count still allows a broadcast."""
+    if n_src_keys > BROADCAST_KEY_LIMIT:
+        return "sort_merge"
+    if all(t.typeName() in FIXED_WIDTH_TYPES for t in carried_types):
+        return "key_broadcast"
+    if _estimate_src_bytes(source, n_rows) <= BROADCAST_BYTES_LIMIT:
+        return "source_broadcast"
+    return "sort_merge"
+
+
+def _rewrite_frame(
+    plan: str,
+    tgt: DataFrame,
+    source: DataFrame,
+    keys: list[str],
+    tcols: list[str],
+    upd_set: set[str],
+    *,
+    lineage: bool,
+    insert_new: bool,
+    delete_matched: bool,
+    collect_metrics: bool,
+    n_src_rows: int,
+    tgt_keys_unique: bool,
+):
+    """The rows that replace the affected files: passthrough + updated
+    (+ inserted) rows, as one DataFrame for the single write action.
+
+    ``tgt`` is the DV-applied read of the affected files (``_row_id``
+    appended under lineage); ``source`` is key-unique with no NULL keys
+    and, unless ``delete_matched``, already projected to ``tcols``.
+    ``tgt_keys_unique`` says no key occurs twice among the matched target
+    rows. Returns ``(frame, counts)``; ``counts()`` — called after the
+    frame's write action — gives ``(n_updated, n_inserted, n_passthrough)``
+    from the Observations riding the write, or -1s without
+    ``collect_metrics``.
+    """
+    from pyspark.sql import Observation
+
+    out = [*tcols, *([ROW_ID] if lineage else [])]
+    obs = Observation("merge_metrics") if collect_metrics else None
+    obs_ins = None  # set where inserts get a counter of their own
+    ins_from_rows = False  # n_inserted = source rows − matched target rows
+
+    if plan == "key_broadcast":
+        # Only keys meet: both build sides are key-sized, so neither the
+        # target nor the source payload goes through an exchange. No
+        # distinct on the probe keys — the source is key-unique, and a
+        # distinct would add a shuffle.
+        s_keys = source.select(*keys).withColumn("__s", F.lit(True))
+        t = tgt.join(F.broadcast(s_keys), keys, "left")
+        if obs is not None:
+            t = t.observe(
+                obs,
+                F.sum(F.when(F.col("__s").isNotNull(), 1).otherwise(0)).alias("n_upd"),
+                F.sum(F.when(F.col("__s").isNull(), 1).otherwise(0)).alias("n_pass"),
+            )
+        result = t.filter(F.col("__s").isNull()).select(*out)
+        if not delete_matched:
+            carried = [c for c in out if c not in keys and c not in upd_set]
+            if carried or not insert_new or not tgt_keys_unique:
+                # matched target rows projected to keys + carried columns
+                # (≤ n_src_keys rows when target keys are unique); a target
+                # key held twice yields two updated rows, as in sort_merge
+                mt = tgt.select(*keys, *carried).join(
+                    F.broadcast(source.select(*keys)), keys, "left_semi"
+                ).select(
+                    *keys,
+                    *[F.col(c).alias(f"__t_{c}") for c in carried],
+                    F.lit(True).alias("__t"),
+                )
+                u = source.join(
+                    F.broadcast(mt), keys, "left" if insert_new else "inner"
+                )
+                if collect_metrics and insert_new:
+                    obs_ins = Observation("merge_inserts")
+                    u = u.observe(
+                        obs_ins,
+                        F.sum(F.when(F.col("__t").isNull(), 1).otherwise(0)).alias("n_ins"),
+                    )
+                upserts = u.select(*[
+                    F.col(f"__t_{c}").alias(c) if c == ROW_ID
+                    else F.when(F.col("__t").isNotNull(), F.col(f"__t_{c}"))
+                    .otherwise(F.col(c)).alias(c) if c in carried
+                    else F.col(c)
+                    for c in out
+                ])
+            else:
+                # every source row is written as is; with unique matched
+                # target keys, inserts = source rows − matched rows
+                upserts = source.select(*tcols)
+                ins_from_rows = True
+            result = result.unionByName(upserts)
+    else:
+        t = tgt.alias("t").withColumn("__t", F.lit(True))
+        s = source.alias("s").withColumn("__s", F.lit(True))
+        cond = [t[k].eqNullSafe(s[k]) for k in keys]
+        if plan == "source_broadcast":
+            # the target side is never shuffled: updates/passthrough =
+            # target LEFT JOIN broadcast(source); inserts come below
+            joined = t.join(F.broadcast(s), cond, "left")
+        else:
+            # sort-merge full outer; AQE splits skewed keys, and the caller
+            # can layer deterministic salting on discovery
+            joined = t.join(s, cond, "full_outer")
+
+        matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
+        out_cols = []
+        for c in tcols:
+            tc, sc = t[c], (s[c] if c in source.columns else F.lit(None))
+            if c in keys:
+                expr = F.coalesce(tc, sc)
+            elif c in upd_set:
+                expr = F.when(matched, sc).when(F.col("__t").isNotNull(), tc).otherwise(sc)
+            else:
+                expr = F.when(F.col("__t").isNotNull(), tc).otherwise(sc)
+            out_cols.append(expr.alias(c))
+        if lineage:
+            # carried/updated rows keep the target's id; full-outer insert
+            # rows (__t null) get NULL and fall back to the commit-assigned
+            # virtual id
+            out_cols.append(
+                F.when(F.col("__t").isNotNull(), t[ROW_ID])
+                .otherwise(F.lit(None).cast("long"))
+                .alias(ROW_ID)
+            )
+
+        if obs is not None:
+            joined = joined.observe(
+                obs,
+                F.sum(F.when(matched, 1).otherwise(0)).alias("n_upd"),
+                F.sum(
+                    F.when(F.col("__s").isNotNull() & F.col("__t").isNull(), 1).otherwise(0)
+                ).alias("n_ins"),
+                F.sum(
+                    F.when(F.col("__t").isNotNull() & F.col("__s").isNull(), 1).otherwise(0)
+                ).alias("n_pass"),
+            )
+
+        if delete_matched:
+            result = joined.filter(F.col("__t").isNotNull() & F.col("__s").isNull()).select(
+                *[t[c].alias(c) for c in out]
+            )
+        elif not insert_new:
+            result = joined.filter(F.col("__t").isNotNull()).select(*out_cols)
+        elif plan == "source_broadcast":
+            # inserts don't appear in a LEFT join: union source rows whose
+            # key matched nothing (anti-join against the broadcast
+            # matched-key set — matched keys ⊆ source keys, so it is small)
+            matched_keys = tgt.select(*keys).join(
+                F.broadcast(source.select(*keys)), keys, "left_semi"
+            ).distinct()
+            inserts = source.join(F.broadcast(matched_keys), keys, "left_anti").select(*tcols)
+            if lineage:
+                inserts = inserts.withColumn(ROW_ID, F.lit(None).cast("long"))
+            if collect_metrics:
+                obs_ins = Observation("merge_inserts")
+                inserts = inserts.observe(obs_ins, F.count(F.lit(1)).alias("n_ins"))
+            result = joined.select(*out_cols).unionByName(inserts)
+        else:
+            result = joined.select(*out_cols)
+
+    def counts() -> tuple[int, int, int]:
+        if obs is None:
+            return -1, -1, -1  # metrics skipped (foreachBatch-safe)
+        got = obs.get
+        n_upd, n_ins, n_pass = got["n_upd"] or 0, got.get("n_ins") or 0, got["n_pass"] or 0
+        if obs_ins is not None:
+            n_ins = obs_ins.get["n_ins"] or 0
+        elif ins_from_rows:
+            n_ins = n_src_rows - n_upd
+        if not insert_new or delete_matched:
+            n_ins = 0
+        return n_upd, n_ins, n_pass
+
+    return result, counts

@@ -890,8 +890,13 @@ class IcehouseTable:
         cluster_by: list[str] | None = None,
         bucket_props: dict | None = None,
         range_sort_ok: bool = True,
+        max_records_per_file: int | None = None,
     ) -> list[DataFile]:
         """Write df's data as immutable parquet files + collect their stats.
+
+        ``max_records_per_file`` caps every written file's row count in the
+        writer itself (Spark's ``maxRecordsPerFile``): a task rolls to a new
+        file at the cap, so sizing output files needs no repartition.
 
         ``cluster_by``: transient sort columns (e.g. a Z-order code) — files
         are range-partitioned and sorted on them so parquet/manifest stats
@@ -1011,6 +1016,8 @@ class IcehouseTable:
         codec = props.get("write.parquet.compression-codec")
         if codec:
             writer = writer.option("compression", codec)
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
         writer.parquet(staging)
 
         moved: list[tuple[str, int | None, dict]] = []

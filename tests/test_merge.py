@@ -137,20 +137,49 @@ def test_merge_salted_discovery(spark, base_table):
     assert base_table.scan().count() == 310
 
 
-def test_merge_broadcast_path_plan_shape(spark, base_table):
-    """Small-source merge must never shuffle the target: the rewrite plan
-    uses BroadcastHashJoin, not SortMergeJoin/Exchange on the target side."""
-    from pyspark.sql import functions as F
+def _delta_on_disk(spark, tmp_path):
+    """A key-unique recrawl delta read back from parquet — the file-backed
+    source shape of a bulk recrawl merge."""
+    path = str(tmp_path / "delta")
+    dedup_latest(
+        generate_recrawl_delta(spark, 300, n_new=15, n_recrawl=25, seed=21),
+        ["url"], "warc_ts",
+    ).write.parquet(path)
+    return spark.read.parquet(path)
 
-    tgt_files = [f"{base_table.path}/{f.path}" for f in base_table.live_files()]
-    tgt = spark.read.schema(base_table.schema()).parquet(*tgt_files)
-    src = base_table.scan().orderBy("url").limit(5)
-    t = tgt.alias("t").withColumn("__t", F.lit(True))
-    s = src.alias("s").withColumn("__s", F.lit(True))
-    joined = t.join(F.broadcast(s), [t["url"].eqNullSafe(s["url"])], "left")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+def test_merge_broadcast_path_plan_shape(spark, base_table, tmp_path, monkeypatch):
+    """A source above BROADCAST_BYTES_LIMIT with a small key set takes the
+    key_broadcast plan, and the frame merge_into writes never shuffles:
+    no SortMergeJoin, and every exchange is a broadcast. The source-size
+    estimate does not run on this plan."""
+    import ecommerce_lakehouse_spark.operators.merge as m
+
+    frames = []
+    real = m._rewrite_frame
+
+    def capture(*a, **kw):
+        out = real(*a, **kw)
+        frames.append(out[0])
+        return out
+
+    def _boom(*a, **kw):  # noqa: ANN002, ANN003
+        raise AssertionError("source-size estimate ran on the key_broadcast plan")
+
+    monkeypatch.setattr(m, "BROADCAST_BYTES_LIMIT", 0)  # every source is above
+    monkeypatch.setattr(m, "_rewrite_frame", capture)
+    monkeypatch.setattr(m, "_estimate_src_bytes", _boom)
+    res = merge_into(base_table, _delta_on_disk(spark, tmp_path), "url")
+    assert res.snapshot.summary["merge_plan"] == "key_broadcast"
+    assert (res.rows_updated, res.rows_inserted) == (25, 15)
+    (frame,) = frames
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+    exchanges = [ln.strip() for ln in plan.splitlines() if "Exchange" in ln]
+    assert exchanges
+    for ln in exchanges:
+        assert "BroadcastExchange" in ln, f"non-broadcast exchange: {ln}"
 
 
 def test_merge_big_source_path_equivalent(spark, base_table):
@@ -168,8 +197,210 @@ def test_merge_big_source_path_equivalent(spark, base_table):
         res = merge_into(base_table, delta, "url")
     finally:
         m.BROADCAST_KEY_LIMIT = old
+    assert res.snapshot.summary["merge_plan"] == "sort_merge"
     assert res.rows_updated == 25 and res.rows_inserted == 15
     assert base_table.scan().count() == 315
+
+
+REWRITE_PLANS = ("key_broadcast", "source_broadcast", "sort_merge")
+
+
+def _merge_under_each_plan(spark, tmp_path, monkeypatch, prepare=None,
+                           properties=None, **merge_kw):
+    """Run one merge of the on-disk delta on identical fresh tables, once
+    per rewrite plan. merge_into must pick key_broadcast itself; the other
+    plans are forced. Returns {plan: (counts, table state, result, table)}
+    and asserts every plan agrees with key_broadcast. The state leaves
+    ``_row_id`` out: ids of inserted rows follow the written file layout,
+    which differs between plans."""
+    import ecommerce_lakehouse_spark.operators.merge as m
+
+    delta = _delta_on_disk(spark, tmp_path)
+    real = m._merge_plan
+    out = {}
+    for plan in REWRITE_PLANS:
+        tbl = IcehouseTable.create(
+            spark, str(tmp_path / plan),
+            generate_pages(spark, 300, seed=21, partitions=3)
+            .repartitionByRange(6, "url"),
+            properties=properties,
+        )
+        if prepare is not None:
+            prepare(tbl)
+        monkeypatch.setattr(
+            m, "_merge_plan", real if plan == "key_broadcast" else (lambda *a, p=plan: p)
+        )
+        res = merge_into(tbl, delta, "url", **merge_kw)
+        sm = res.snapshot.summary
+        assert sm["merge_plan"] == plan
+        counts = (sm["merge_updated"], sm["merge_inserted"], sm["merge_passthrough"])
+        assert counts == (res.rows_updated, res.rows_inserted,
+                          res.rows_rewritten - res.rows_updated - res.rows_inserted)
+        state = sorted(map(tuple, tbl.scan().collect()), key=repr)
+        out[plan] = (counts, state, res, tbl)
+    monkeypatch.setattr(m, "_merge_plan", real)
+    kb_counts, kb_state, _, _ = out["key_broadcast"]
+    for plan in REWRITE_PLANS[1:]:
+        assert out[plan][0] == kb_counts, f"{plan} counts differ"
+        assert out[plan][1] == kb_state, f"{plan} table state differs"
+    return out
+
+
+def _touched_rows(tbl):
+    """Rows of the files the last merge replaced (passthrough + updated)."""
+    snaps = tbl.snapshots()
+    before = {f.path: f.row_count for f in tbl.live_files(snaps[-2])}
+    after = {f.path for f in tbl.live_files(snaps[-1])}
+    return sum(n for p, n in before.items() if p not in after)
+
+
+def test_key_broadcast_scd1_matches_existing_plans(spark, tmp_path, monkeypatch):
+    out = _merge_under_each_plan(spark, tmp_path, monkeypatch)
+    (upd, ins, pas), state, res, tbl = out["key_broadcast"]
+    assert (upd, ins) == (25, 15)
+    assert upd + pas == _touched_rows(tbl)
+    assert len(state) == 315
+
+
+def test_key_broadcast_preserve_cols_matches_existing_plans(spark, tmp_path, monkeypatch):
+    out = _merge_under_each_plan(
+        spark, tmp_path, monkeypatch, preserve_cols=("warc_ts",)
+    )
+    (upd, ins, pas), _, _, tbl = out["key_broadcast"]
+    assert (upd, ins) == (25, 15)
+    assert upd + pas == _touched_rows(tbl)
+    base = {r.url: r.warc_ts for r in generate_pages(spark, 300, seed=21).collect()}
+    got = tbl.scan().filter(F.col("text").contains("rev1 ")).collect()
+    assert len(got) == 25
+    assert all(r.warc_ts == base[r.url] for r in got), "preserved column must keep target value"
+
+
+def test_key_broadcast_insert_new_false_matches_existing_plans(spark, tmp_path, monkeypatch):
+    out = _merge_under_each_plan(spark, tmp_path, monkeypatch, insert_new=False)
+    (upd, ins, pas), state, _, tbl = out["key_broadcast"]
+    assert (upd, ins) == (25, 0)
+    assert upd + pas == _touched_rows(tbl)
+    assert len(state) == 300
+
+
+def test_key_broadcast_delete_matched_matches_existing_plans(spark, tmp_path, monkeypatch):
+    out = _merge_under_each_plan(spark, tmp_path, monkeypatch, delete_matched=True)
+    (upd, ins, pas), state, _, tbl = out["key_broadcast"]
+    assert (upd, ins) == (25, 0)
+    assert pas == _touched_rows(tbl) - 25
+    assert len(state) == 275
+
+
+def test_key_broadcast_row_lineage_keeps_target_ids(spark, tmp_path, monkeypatch):
+    from ecommerce_lakehouse_spark.table.format import ROW_ID
+
+    ids_before = {}
+
+    def remember(tbl):
+        ids_before[tbl.path] = {
+            r.url: r[ROW_ID]
+            for r in tbl.scan(row_lineage=True).select("url", ROW_ID).collect()
+        }
+
+    out = _merge_under_each_plan(
+        spark, tmp_path, monkeypatch, prepare=remember,
+        properties={"row-lineage": "true"},
+    )
+    assert out["key_broadcast"][0][:2] == (25, 15)
+    for plan, (_, _, _, tbl) in out.items():
+        before = ids_before[tbl.path]
+        rows = tbl.scan(row_lineage=True).select("url", "text", ROW_ID).collect()
+        updated = [r for r in rows if "rev1 " in r.text]
+        assert len(updated) == 25
+        assert all(r[ROW_ID] == before[r.url] for r in updated), (
+            f"{plan}: matched rows must keep the target's _row_id"
+        )
+        ids = [r[ROW_ID] for r in rows]
+        assert None not in ids and len(set(ids)) == len(ids) == 315
+
+
+def test_key_broadcast_null_target_key_passes_through(spark, tmp_path, monkeypatch):
+    """A target file holding a NULL-key row and a key the delta updates:
+    the file is rewritten, the NULL-key row passes through untouched."""
+
+    def add_null_key_row(tbl):
+        spark_ = tbl.spark
+        new = (
+            spark_.read.parquet(str(tmp_path / "delta"))
+            .join(tbl.scan().select("url"), "url", "left_anti")
+            .orderBy("url").limit(1)
+        )
+        tbl.append(
+            new.withColumn("lang", F.lit("old"))
+            .unionByName(new.withColumn("url", F.lit(None).cast("string"))
+                         .withColumn("lang", F.lit("nullkey")))
+            .coalesce(1)
+        )
+
+    out = _merge_under_each_plan(
+        spark, tmp_path, monkeypatch, prepare=add_null_key_row
+    )
+    (upd, ins, pas), state, _, tbl = out["key_broadcast"]
+    assert (upd, ins) == (26, 14)
+    assert upd + pas == _touched_rows(tbl)
+    nulls = tbl.scan().filter(F.col("url").isNull()).collect()
+    assert [r.lang for r in nulls] == ["nullkey"]
+    assert len(state) == 316
+
+
+def test_key_broadcast_duplicate_target_key_updates_each_row(spark, tmp_path, monkeypatch):
+    """A target holding one key twice (possible through appends): like the
+    existing plans, key_broadcast updates both rows."""
+
+    def duplicate_one_key(tbl):
+        src_urls = tbl.spark.read.parquet(str(tmp_path / "delta")).select("url")
+        tbl.append(tbl.scan().join(src_urls, "url", "left_semi").orderBy("url").limit(1))
+
+    out = _merge_under_each_plan(
+        spark, tmp_path, monkeypatch, prepare=duplicate_one_key
+    )
+    (upd, ins, _), state, _, _ = out["key_broadcast"]
+    assert (upd, ins) == (26, 15)
+    assert len(state) == 316
+
+
+def test_key_broadcast_dv_deleted_rows_stay_deleted(spark, tmp_path, monkeypatch):
+    """Rows removed by deletion vectors must not come back: deleted
+    passthrough rows stay gone, and a deleted row the delta recrawls is
+    re-inserted, not updated."""
+    from ecommerce_lakehouse_spark.table import Predicate, delete_where
+
+    doomed = {}
+
+    def delete_some(tbl):
+        src = {r.url for r in tbl.spark.read.parquet(str(tmp_path / "delta")).select("url").collect()}
+        urls = sorted(r.url for r in tbl.scan().select("url").collect())
+        recrawled = [u for u in urls if u in src][:3]
+        untouched = [u for u in urls if u not in src][:3]
+        doomed["recrawled"], doomed["untouched"] = recrawled, untouched
+        assert delete_where(tbl, [Predicate("url", "in", tuple(recrawled + untouched))])
+        assert tbl.delete_registry_full()["entries"], "delete must leave DVs"
+
+    out = _merge_under_each_plan(spark, tmp_path, monkeypatch, prepare=delete_some)
+    (upd, ins, pas), state, _, tbl = out["key_broadcast"]
+    assert (upd, ins) == (22, 18)
+    assert len(state) == 312
+    urls = {r.url for r in tbl.scan().select("url").collect()}
+    assert not urls & set(doomed["untouched"]), "DV-deleted rows came back"
+    assert set(doomed["recrawled"]) <= urls
+
+
+def test_key_broadcast_target_file_rows_caps_written_files(spark, tmp_path, monkeypatch):
+    out = _merge_under_each_plan(
+        spark, tmp_path, monkeypatch, target_file_rows=20
+    )
+    for plan, (_, _, res, tbl) in out.items():
+        sid = res.snapshot.snapshot_id
+        added = [f for f in tbl.live_files() if f.added_by == sid]
+        assert added
+        assert max(f.row_count for f in added) <= 20, f"{plan} wrote a file over the cap"
+    (upd, ins, _), state, _, _ = out["key_broadcast"]
+    assert (upd, ins) == (25, 15) and len(state) == 315
 
 
 def test_merge_rejects_null_keys(spark, base_table):
@@ -182,6 +413,24 @@ def test_merge_rejects_null_keys(spark, base_table):
     )
     with pytest.raises(ValueError, match="NULL in merge key"):
         merge_into(base_table, delta, "url")
+
+
+def test_merge_null_key_error_from_footers_is_a_lower_bound(spark, base_table, tmp_path):
+    """A bare parquet source is checked from its footers, which count nulls
+    per column, not per row: with composite keys the error states a lower
+    bound ("at least N"), never the per-column sum."""
+    rows = base_table.scan().orderBy("url").limit(5)
+    src = (
+        rows.limit(2).withColumn("url", F.lit(None).cast("string"))
+        .withColumn("lang", F.lit(None).cast("string"))  # 2 rows, both keys null
+        .unionByName(rows.limit(1).withColumn("url", F.lit(None).cast("string")))
+        .unionByName(rows.orderBy(F.col("url").desc()).limit(2))
+    )
+    path = str(tmp_path / "nullsrc")
+    src.coalesce(1).write.parquet(path)
+    # 3 rows have a NULL key; the per-column null counts sum to 5
+    with pytest.raises(ValueError, match=r"at least 3 source row\(s\) have NULL"):
+        merge_into(base_table, spark.read.parquet(path), ["url", "lang"])
 
 
 def test_merge_prep_plan_reads_only_key_columns(spark, tmp_path):
